@@ -38,6 +38,7 @@ GENESIS_BLOCK = 1_000_000
 FIRST_EPOCH = 100_000
 SLOTS_PER_EPOCH = 32
 N_INDEXES = 24
+VOCAB = 4000  # distinct non-stopword tokens in a corpus
 
 
 def rng(seed: int, table: str) -> np.random.Generator:
@@ -224,18 +225,18 @@ class Corpus:
     exact_dup_of: dict[int, int]
 
 
-def corpus(seed: int, n_docs: int, vocab_size: int = 4000, table: str = "documents") -> Corpus:
+def corpus(seed: int, n_docs: int, table: str = "documents") -> Corpus:
     r = rng(seed, table)
-    ranks = np.arange(1, vocab_size + 1, dtype=np.float64)
+    ranks = np.arange(1, VOCAB + 1, dtype=np.float64)
     p = ranks**-1.05
     p /= p.sum()
-    vocab = np.array([f"w{i:04d}" for i in range(vocab_size)])
+    vocab = np.array([f"w{i:04d}" for i in range(VOCAB)])
     stop = np.array(STOPWORDS)
     lens = np.clip(r.lognormal(4.0, 0.6, n_docs).astype(np.int64), 12, 400)
     texts: list[str] = []
     for i in range(n_docs):
         n = int(lens[i])
-        words = vocab[r.choice(vocab_size, n, p=p)]
+        words = vocab[r.choice(VOCAB, n, p=p)]
         is_stop = r.random(n) < 0.3
         words[is_stop] = stop[r.integers(0, len(stop), int(is_stop.sum()))]
         text = " ".join(words)
@@ -258,7 +259,7 @@ def corpus(seed: int, n_docs: int, vocab_size: int = 4000, table: str = "documen
         elif u < 0.08:
             toks = texts[src].split()
             for _ in range(max(1, len(toks) // 50)):
-                toks[int(r.integers(0, len(toks)))] = str(vocab[int(r.integers(0, vocab_size))])
+                toks[int(r.integers(0, len(toks)))] = str(vocab[int(r.integers(0, VOCAB))])
             texts[i] = " ".join(toks)
             near[i] = src
     return Corpus(texts, near, exact)

@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import os
 import platform
+import re
 import shutil
 import subprocess
 import time
 
-# The driver JVM's heap, pre-sized (-Xms) so that peak RSS does not depend
-# on when the collector decides to grow the heap.
+# The Spark JVM's heap ceiling (-Xmx). The heap starts at the JVM's
+# default size and grows as the program needs, so peak RSS follows the
+# program's memory use.
 DRIVER_MEMORY = "2g"
 
 
@@ -45,6 +47,23 @@ def peak_rss_mb(pids: list[int]) -> float:
     return total_kb / 1024.0
 
 
+_GC_AFTER = re.compile(r"->(\d+)([KMG])\(\d+[KMG]\)")
+
+
+def heap_live_peak_mb(gc_log: str) -> float:
+    """Largest heap occupancy right after a collection, from the JVM's
+    ``-Xlog:gc`` lines (``... 90M->32M(110M) 7.051ms``): the most live
+    data the heap held, whatever the collector's sizing did."""
+    scale = {"K": 1 / 1024, "M": 1.0, "G": 1024.0}
+    peak = 0.0
+    with open(gc_log) as f:
+        for line in f:
+            m = _GC_AFTER.search(line)
+            if m:
+                peak = max(peak, float(m.group(1)) * scale[m.group(2)])
+    return peak
+
+
 def dir_bytes(path: str) -> tuple[int, int]:
     """(files, bytes) of the regular files under ``path``."""
     n = b = 0
@@ -76,6 +95,7 @@ class Session:
         for d in ("tmp", "spark-local", "warehouse"):
             os.makedirs(os.path.join(work, d), exist_ok=True)
         tmp = os.path.join(work, "tmp")
+        self.gc_log = os.path.join(tmp, "gc.log")
         os.environ["TMPDIR"] = tmp
         # Takes precedence over spark.local.dir when set.
         os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
@@ -91,7 +111,7 @@ class Session:
                 "spark.driver.memory": DRIVER_MEMORY,
                 "spark.local.dir": os.path.join(work, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-                "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
+                "spark.driver.extraJavaOptions": f"-Xlog:gc:file={self.gc_log} -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
                 # Keep job and stage records for the whole run, so traced
                 # runs can read every span's counts at the end.
                 "spark.ui.retainedJobs": "100000",
@@ -114,6 +134,9 @@ class Session:
 
     def peak_rss_mb(self) -> float:
         return peak_rss_mb([os.getpid(), self.jvm.pid])
+
+    def heap_live_peak_mb(self) -> float:
+        return heap_live_peak_mb(self.gc_log)
 
     def env(self, load_start: list[float], probe_start: float) -> dict:
         import pyspark

@@ -64,6 +64,7 @@ def _layer_metrics() -> dict[str, str]:
             "operators.graph.components_s": "s",
             "caches.tracked_live_after": "count",
             "session.start_s": "s",
+            "session.heap_live_peak_mb": "MB",
         }
     )
     # Per operation of the workload (median): each layer's self time and

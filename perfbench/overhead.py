@@ -1,10 +1,11 @@
 """Tracing overhead of one workload: run it untraced and traced with the
 same seed and print the difference of the end-to-end figures.
 
-    python3 perfbench/overhead.py --workload serve_mixed --seed 1 --seconds 15
+    python3 perfbench/overhead.py --workload corpus_dedup --seed 1
 
-Each figure is one run's median, so repeat over seeds before trusting a
-small difference.
+Both runs measure for BENCHMARK.json's ``run_seconds``. Each figure is
+one run's median, so repeat over seeds before trusting a small
+difference.
 """
 
 from __future__ import annotations
@@ -30,8 +31,9 @@ def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=15)
     args = ap.parse_args(argv)
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        args.seconds = json.load(f)["run_seconds"]
     plain = metrics(args.workload, args.seed, args.seconds, 0)
     traced = metrics(args.workload, args.seed, args.seconds, 1)
     for name, unit in (("batch_s", "s"), ("p50_ms", "ms")):

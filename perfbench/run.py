@@ -29,7 +29,10 @@ import threading
 import time
 from contextlib import contextmanager
 
-WORKLOADS = ("etl_incremental", "serve_mixed", "corpus_dedup")
+WORKLOADS = ("etl_incremental", "corpus_dedup")  # the ones BENCHMARK.json lists
+# Runnable, but outside BENCHMARK.json: one run takes longer than the
+# benchmark's run budget allows (README.md).
+EXTRA_WORKLOADS = ("serve_mixed",)
 WATCHDOG_S = 170  # the run must end within 180 s
 
 
@@ -41,7 +44,7 @@ class Ctx:
         self.sess, self.spark, self.tracer = sess, sess.spark, tracer
         self.work, self.seed, self.seconds, self.t0 = work, seed, seconds, t0
         self.cores = sess.cores
-        self.setup_s = self.deadline = self.peak_rss_mb = None
+        self.setup_s = self.deadline = self.peak_rss_mb = self.heap_live_peak_mb = None
         self.phases: dict[str, float] = {}
 
     def mark(self, phase: str) -> None:
@@ -49,9 +52,10 @@ class Ctx:
         self.phases[phase] = time.perf_counter() - self.t0
 
     def measured(self) -> None:
-        """End of the timed part: read peak RSS before the correctness
+        """End of the timed part: read peak memory before the correctness
         checks, whose DuckDB work runs in this process."""
         self.peak_rss_mb = self.sess.peak_rss_mb()
+        self.heap_live_peak_mb = self.sess.heap_live_peak_mb()
         self.mark("measured")
 
     def setup_done(self) -> None:
@@ -85,7 +89,7 @@ class Ctx:
 
 def parse(argv: list[str]) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=WORKLOADS + EXTRA_WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -129,7 +133,13 @@ def main(argv: list[str]) -> int:
 
     e2e = {"setup_s": ctx.setup_s, "peak_rss_mb": ctx.peak_rss_mb, **out["e2e"]}
     layers = dict.fromkeys(metrics.LAYER, 0.0)
-    layers.update({"session.start_s": sess.start_s, "trace.spans": len(tracer.spans)})
+    layers.update(
+        {
+            "session.start_s": sess.start_s,
+            "session.heap_live_peak_mb": ctx.heap_live_peak_mb,
+            "trace.spans": len(tracer.spans),
+        }
+    )
     layers.update({k: v for k, v in out["layers"].items() if k in metrics.LAYER})
     chosen, units = (layers, metrics.LAYER) if args.trace else (e2e, metrics.E2E)
     correct = out["failed"] == 0 and not out["problems"]

@@ -2,23 +2,29 @@
 (``pipeline_corpus_clean``: quality gate, exact fingerprint dedup,
 capped MinHash-LSH with exact verification, connected components).
 
-The timed part alternates one run over the full corpus with runs over
-small shards of newly arrived documents, so both the data-bound and the
-per-job-overhead-bound shapes are measured. Every run's kept ids must
-equal the catalog oracle's answer over the same file. A traced run also
-runs the stages one by one to attribute time to each operator."""
+The timed part alternates runs over a small shard of newly arrived
+documents with runs over the full corpus, so both the
+per-job-overhead-bound and the data-bound shapes are measured. Every
+run's kept ids must equal the catalog oracle's answer over the same
+file. A traced run puts spans around the calls the pipeline itself
+makes into the operator and cache layers."""
 
 from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from perfbench import check, gen, stats
+from perfbench.trace import self_time
 
 FULL_DOCS = 2500
 SHARD_DOCS = 1000
-MIN_RUNS = 3  # of each shape; full and shard runs alternate
+MIN_RUNS = 3  # of each shape; shard and full runs alternate
+# Untimed. The JIT keeps compiling through the first few runs: with two
+# warm-up runs, the CPU time per run still fell from about 12 s to 7 s
+# over the next three.
+WARM_UP = ("full", "shard", "full", "shard")
 
 
 def _write(ctx, name: str, corpus: gen.Corpus) -> str:
@@ -53,64 +59,70 @@ def _release_scope(tr):
 
 def run(ctx) -> dict:
     full_corpus = gen.corpus(ctx.seed, FULL_DOCS)
-    full = _write(ctx, "full", full_corpus)
-    shard = _write(ctx, "shard", gen.corpus(ctx.seed, SHARD_DOCS, table="shard0"))
+    dirs = {
+        "full": _write(ctx, "full", full_corpus),
+        "shard": _write(ctx, "shard", gen.corpus(ctx.seed, SHARD_DOCS, table="shard0")),
+    }
     ctx.mark("generated")
     with ctx.untraced():
-        clean(ctx, full, "warm")
-        clean(ctx, shard, "warm")
+        for shape in WARM_UP:
+            clean(ctx, dirs[shape], "warm")
     ctx.sess.reset_caches()
     ctx.setup_done()
 
-    runs: list[tuple[str, float, list[int]]] = []  # (input dir, seconds, kept ids)
-    while len(runs) < 2 * MIN_RUNS or time.perf_counter() < ctx.deadline:
-        d, root = (full, "dedup.full") if len(runs) % 2 == 0 else (shard, "dedup.shard")
-        t0 = time.perf_counter()
-        kept = clean(ctx, d, root)
-        runs.append((d, time.perf_counter() - t0, kept))
+    tr = ctx.tracer
+    seen: dict = {}
+    last_full: dict = {}  # the frames of the last full-corpus run
+    runs: list[tuple[str, float, list[int]]] = []  # (shape, seconds, kept ids)
+    with operator_spans(tr, seen) if tr.enabled else nullcontext():
+        while len(runs) < 2 * MIN_RUNS or time.perf_counter() < ctx.deadline:
+            shape = "shard" if len(runs) % 2 == 0 else "full"
+            t0 = time.perf_counter()
+            kept = clean(ctx, dirs[shape], f"dedup.{shape}")
+            runs.append((shape, time.perf_counter() - t0, kept))
+            if shape == "full":
+                last_full = dict(seen)
     tracked_live = ctx.sess.reset_caches()
     ctx.measured()
 
     con = check.duck(ctx.cores, os.path.join(ctx.work, "tmp"))
-    oracle = {d: check.corpus_oracle(con, os.path.join(d, "documents.parquet")) for d in {r[0] for r in runs}}
+    oracle = {
+        shape: check.corpus_oracle(con, os.path.join(d, "documents.parquet")) for shape, d in dirs.items()
+    }
+    con.close()
     problems, failed = [], 0
-    for d, _, kept in runs:
-        want = oracle[d][1]
+    for shape, _, kept in runs:
+        want = oracle[shape][1]
         if len(kept) != len(set(kept)) or set(kept) != want:
             failed += 1
-            problems.append(f"{os.path.basename(d)}: {len(kept)} kept ids, oracle keeps {len(want)}")
+            problems.append(f"{shape}: {len(kept)} kept ids, oracle keeps {len(want)}")
     ctx.mark("oracle")
-    surv, want = oracle[full]
+    surv, want = oracle["full"]
     planted = [i for i, src in full_corpus.near_dup_of.items() if i in surv and src in surv]
     recall = sum(i not in want for i in planted) / len(planted)
 
-    full_s = [s for d, s, _ in runs if d == full]
-    shard_s = [s for d, s, _ in runs if d != full]
+    full_s = [s for shape, s, _ in runs if shape == "full"]
+    shard_s = [s for shape, s, _ in runs if shape == "shard"]
     layers = {
         "operators.dedup.planted_recall": recall,
         "caches.tracked_live_after": tracked_live,
         "trace.batch_s": stats.median(full_s),
         "trace.p50_ms": stats.median(shard_s) * 1e3,
     }
-    tr = ctx.tracer
     if tr.enabled:
-        stage_kept, stage_layers = stages(ctx, full)
-        if stage_kept != want:
-            failed += 1
-            problems.append(f"staged run: {len(stage_kept)} kept ids, oracle keeps {len(want)}")
+        counts = operator_counts(ctx, last_full)
         tr.finish()
-        layers.update(stage_layers(tr))
-        layers.update(ctx.layer_summary("dedup.stages"))
-    con.close()
+        layers.update(operator_metrics(tr, counts))
+        layers.update(ctx.layer_summary("dedup.full"))
 
     return {
         "e2e": {
             "batch_s": stats.median(full_s),
             "p50_ms": stats.median(shard_s) * 1e3,
-            "throughput_per_s": FULL_DOCS * len(full_s) / sum(full_s),
+            "throughput_per_s": stats.median([FULL_DOCS / s for s in full_s]),
         },
         "layers": layers,
-        "attempted": len(runs) + (1 if tr.enabled else 0),  # the staged pass
+        "attempted": len(runs),
         "failed": failed,
         "problems": problems,
         "notes": {
@@ -125,60 +137,108 @@ def run(ctx) -> dict:
     }
 
 
-def stages(ctx, sf_dir: str):
-    """The pipeline's stages one at a time, each forced by its own
-    action. Returns the kept ids and a function that reads the stage
-    metrics off the finished tracer."""
+@contextmanager
+def operator_spans(tr, seen: dict):
+    """While open, the names ``pipeline_corpus_clean`` calls into the
+    operator and cache layers are wrapped in spans, so the traced runs
+    time the pipeline's own plan:
+
+    - ``operators.dedup.exact``: the one frame the pipeline persists,
+      the survivors of the quality gate and the exact fingerprint dedup
+      (Spark runs both as one plan). Its ``.exec`` span forces it with a
+      count; the pipeline then reads it from the cache, so the only
+      added work is that count.
+    - ``operators.dedup.lsh``: ``near_dup_pairs`` builds the candidate
+      and verification plan; the first checkpoint inside
+      ``connected_components`` materializes the verified edges, and
+      that is the ``.exec`` span.
+    - ``operators.graph.components``: the ``connected_components`` call;
+      its self time excludes the edge materialization.
+
+    Each run's fan-out frame, survivors and edges are left in ``seen``
+    for :func:`operator_counts`."""
+    from stakehouse_etl_spark import caches
+    from stakehouse_etl_spark.operators import graph
+    from stakehouse_etl_spark.queries import corpus
+
+    orig = (caches.persist_tracked, corpus.fan_out, corpus.near_dup_pairs, corpus.connected_components,
+            graph.checkpoint_tracked)
+    persist_tracked, fan_out, near_dup_pairs, connected_components, checkpoint_tracked = orig
+    edges_pending = [False]
+
+    def traced_fan_out(df, *a, **k):
+        seen["wide"] = out = fan_out(df, *a, **k)
+        return out
+
+    def traced_persist(df, *a, **k):
+        with tr.span("operators.dedup.exact.build"):
+            seen["surv"] = out = persist_tracked(df, *a, **k)
+        with tr.span("operators.dedup.exact.exec"):
+            out.count()
+        return out
+
+    def traced_near_dup_pairs(df, *a, **k):
+        with tr.span("operators.dedup.lsh.build"):
+            seen["edges"] = out = near_dup_pairs(df, *a, **k)
+        return out
+
+    def traced_components(edges, *a, **k):
+        edges_pending[0] = True
+        with tr.span("operators.graph.components"):
+            return connected_components(edges, *a, **k)
+
+    def traced_checkpoint(df, *a, **k):
+        if not edges_pending[0]:
+            return checkpoint_tracked(df, *a, **k)
+        edges_pending[0] = False
+        with tr.span("operators.dedup.lsh.exec"):
+            return checkpoint_tracked(df, *a, **k)
+
+    caches.persist_tracked, corpus.fan_out, corpus.near_dup_pairs = traced_persist, traced_fan_out, traced_near_dup_pairs
+    corpus.connected_components, graph.checkpoint_tracked = traced_components, traced_checkpoint
+    try:
+        yield
+    finally:
+        (caches.persist_tracked, corpus.fan_out, corpus.near_dup_pairs, corpus.connected_components,
+         graph.checkpoint_tracked) = orig
+
+
+def operator_counts(ctx, seen: dict) -> dict:
+    """Counts over one traced full run's own frames, after the timed
+    part. The quality gate alone is forced here, over the pipeline's
+    fan-out frame: inside the pipeline Spark fuses it with the exact
+    dedup."""
     from pyspark.sql import functions as F
 
-    from stakehouse_etl_spark import caches
-    from stakehouse_etl_spark.io.sources import load_table
-    from stakehouse_etl_spark.operators.dedup import exact_dedup, lsh_candidates, near_dup_pairs
-    from stakehouse_etl_spark.operators.graph import connected_components
-    from stakehouse_etl_spark.operators.text import fan_out, quality_keep
+    from stakehouse_etl_spark.operators.dedup import lsh_candidates
+    from stakehouse_etl_spark.operators.text import quality_keep
 
-    tr, spark = ctx.tracer, ctx.spark
-    counts = {}
-    with tr.span("dedup.stages"), _release_scope(tr):
-        wide = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-        with tr.span("operators.text.quality.build"):
-            passed = caches.persist_tracked(wide.filter(quality_keep(F.col("text"))))
+    tr = ctx.tracer
+    with tr.span("dedup.counts"), _release_scope(tr):
         with tr.span("operators.text.quality.exec"):
-            counts["docs_kept"] = passed.count()
-        with tr.span("operators.dedup.exact.build"):
-            canon = exact_dedup(passed).select(F.col("canonical_id").alias("doc_id"))
-            surv = caches.persist_tracked(passed.join(canon, "doc_id", "left_semi"))
-        with tr.span("operators.dedup.exact.exec"):
-            surv.count()
-        with tr.span("operators.dedup.lsh.build"):
-            pairs = caches.persist_tracked(near_dup_pairs(surv, threshold_pct=20).select("id_a", "id_b"))
-        with tr.span("operators.dedup.lsh.exec"):
-            counts["verified"] = pairs.count()
-        with tr.span("operators.dedup.lsh_candidates.build"):
-            cand = lsh_candidates(surv)
+            kept = seen["wide"].filter(quality_keep(F.col("text"))).count()
         with tr.span("operators.dedup.lsh_candidates.exec"):
-            counts["candidates"] = cand.count()
-        with tr.span("operators.graph.components.build"):
-            comp = connected_components(pairs, src="id_a", dst="id_b")
-        with tr.span("operators.graph.components.exec"):
-            dropped = {r[0] for r in comp.filter(F.col("component") < F.col("node")).select("node").collect()}
-        kept = {r[0] for r in surv.select("doc_id").collect()} - dropped
+            candidates = lsh_candidates(seen["surv"]).count()
+        verified = seen["edges"].count()
+    return {"docs_kept": kept, "candidates": candidates, "verified": verified}
 
-    def layer_metrics(tr) -> dict:
-        def dur(name: str) -> float:
-            return sum(s.duration for s in tr.named(name))
 
-        return {
-            "operators.text.quality_s": dur("operators.text.quality.exec"),
-            "operators.text.docs_kept": counts["docs_kept"],
-            "operators.dedup.exact_s": dur("operators.dedup.exact.exec"),
-            "operators.dedup.lsh_s": dur("operators.dedup.lsh.exec"),
-            "operators.dedup.lsh_candidates": counts["candidates"],
-            "operators.dedup.verified_pairs": counts["verified"],
-            "operators.dedup.lsh_useful_ratio": counts["verified"] / max(counts["candidates"], 1),
-            # connected_components resolves eagerly when called.
-            "operators.graph.components_s": dur("operators.graph.components.build")
-            + dur("operators.graph.components.exec"),
-        }
+def operator_metrics(tr, counts: dict) -> dict:
+    """Medians over the traced full-corpus runs, plus the counts."""
+    roots = {s.id for s in tr.named("dedup.full")}
+    kids = tr.children()
 
-    return kept, layer_metrics
+    def med(name: str, own: bool = False) -> float:
+        spans = [s for s in tr.spans if s.op in roots and s.name == name]
+        return stats.median([self_time(s, kids.get(s.id, [])) if own else s.duration for s in spans])
+
+    return {
+        "operators.text.quality_s": tr.named("operators.text.quality.exec")[0].duration,
+        "operators.text.docs_kept": counts["docs_kept"],
+        "operators.dedup.exact_s": med("operators.dedup.exact.exec"),
+        "operators.dedup.lsh_s": med("operators.dedup.lsh.exec"),
+        "operators.dedup.lsh_candidates": counts["candidates"],
+        "operators.dedup.verified_pairs": counts["verified"],
+        "operators.dedup.lsh_useful_ratio": counts["verified"] / max(counts["candidates"], 1),
+        "operators.graph.components_s": med("operators.graph.components", own=True),
+    }

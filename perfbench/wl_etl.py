@@ -132,12 +132,11 @@ def run(ctx) -> dict:
         )
         layers.update(ctx.layer_summary("etl.cycle"))
 
-    cycle_total = sum(cycle_s)
     return {
         "e2e": {
             "batch_s": backfill_s,
             "p50_ms": stats.median(cycle_s) * 1e3,
-            "throughput_per_s": sum(rows_new) / cycle_total,
+            "throughput_per_s": stats.median([r / s for r, s in zip(rows_new, cycle_s)]),
         },
         "layers": layers,
         "attempted": attempted,

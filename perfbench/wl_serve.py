@@ -26,24 +26,22 @@ N_KEYS = 400
 EPOCHS = 200
 N_USERS = 200
 OPEN_REQUESTS = 40  # p75 then has 10 samples beyond it
-OPEN_RATE = 3.0  # requests per second
-CLOSED_BLOCK = 40  # closed-loop requests per block; at least one block runs
+OPEN_RATE = 1.8  # requests per second: about half the closed-loop capacity (README.md)
+CLOSED_BLOCK = 30  # closed-loop requests per block, MIX exact; at least one block runs
 MAX_CLOSED_BLOCKS = 40
 WARM_REQUESTS = 10  # untimed, before the open loop
 POOL = 8  # open-loop dispatch threads
-MIX = {
-    "validator_epoch_apr": 0.26,
-    "validator_apr_between_epochs": 0.21,
-    "user_income": 0.03,
-    "slot_withdrawals_page": 0.30,
-    "deth_earned_index": 0.04,
-    "index_apr_recent": 0.14,
-    "top_indexes": 0.02,
-}
+# 80% per-validator point reads, 20% index aggregates. No source gives
+# per-endpoint frequencies, so each group's share is split equally
+# among its endpoints; README.md states this as an assumption.
+POINT_READS = ("validator_epoch_apr", "validator_apr_between_epochs", "user_income", "slot_withdrawals_page")
+AGGREGATES = ("deth_earned_index", "index_apr_recent", "top_indexes")
+MIX = {**{ep: 0.8 / len(POINT_READS) for ep in POINT_READS}, **{ep: 0.2 / len(AGGREGATES) for ep in AGGREGATES}}
+ZIPF_S = 1.1  # popularity exponent of keys, users, validators and indexes (an assumption)
 
 
-def zipf(r: np.random.Generator, n: int, size: int, s: float = 1.1) -> np.ndarray:
-    p = np.arange(1, n + 1, dtype=np.float64) ** -s
+def zipf(r: np.random.Generator, n: int, size: int) -> np.ndarray:
+    p = np.arange(1, n + 1, dtype=np.float64) ** -ZIPF_S
     return r.choice(n, size, p=p / p.sum())
 
 
