@@ -5,19 +5,31 @@ Five tiers, cheapest-first — the standard large-corpus dedup ladder:
 1. ``exact_dedup`` — hash-groupBy on a normalized fingerprint.
 2. ``jaccard_pairs`` — exact n-gram Jaccard via shingle self-join
    (quadratic in bucket size; the ground truth for the sketches).
-3. ``minhash_lsh_pairs`` — MinHash signatures + LSH banding: the
+3. ``minhash_lsh_pairs`` (alias ``near_dup_pairs``, the stage every
+   composed pipeline calls) — MinHash signatures + LSH banding: the
    100 TB path. Cost: one explode (doc × shingle), one groupBy (doc),
-   one explode (doc × band), one equi-join on (band, hash) — all
-   shuffle-bounded by data size, never all-pairs.
+   one explode (doc × band), one capped bucket-collect groupBy on
+   (band, hash) — all shuffle-bounded by data size, never all-pairs.
 4. ``simhash`` — 32-bit sign-hash sketch; near-dups differ in few bits.
 5. embedding cosine near-dup — see :mod:`similarity` (quantized).
+
+The MinHash family has ONE shape, filter-and-verify: one per-doc
+state builder (``_per_doc_state``: signature mins + sorted shingle
+set + count in a single groupBy), one candidate generator per input
+form (``_candidates_from_banded`` for a corpus, the side-aware
+bucket-collect in ``incremental_minhash_dedup_indexed`` for a batch
+against a stored index), both capped at ``max_bucket`` by the
+spillable window count before anything is collected, and one
+exact-Jaccard verifier (``_verify_candidates``) shared with the
+prefix-filter tier. ``jaccard_pairs`` is the uncapped ground truth.
 
 Every hash here is the md5-hex-prefix integer from
 :mod:`operators.text`, so DuckDB reproduces all of this exactly —
 the sketches have real value-level oracles, not just row counts.
 
-Persist lifecycle: the pair operators persist the exploded shingle
-table (three consumers each) via :func:`caches.persist_tracked`, and
+Persist lifecycle: the pair operators persist their per-doc state
+(or, for the exact self-joins, the exploded shingle table) via
+:func:`caches.persist_tracked`, and
 callers end the cache's lifetime at their ACTION boundary with
 ``caches.cache_scope()`` / ``caches.release_tracked()`` — no cached
 RDD outlives the materialization that needed it, even in a
@@ -29,15 +41,15 @@ intermediate dataset instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.caches import persist_tracked
+from stakehouse_etl_spark.operators.buckets import drop_oversize_buckets
 from stakehouse_etl_spark.operators.text import (
     fan_out,
     hash32,
     normalized_fingerprint,
-    shingles,
     shingles_from_toks,
     tokens,
 )
@@ -285,24 +297,14 @@ def _banded_from_sig(sig: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _band_candidates(
-    sh: DataFrame, id_col: str, max_bucket: int | None = LSH_MAX_BUCKET
-) -> DataFrame:
-    """LSH band-join candidate pairs from an exploded shingle table.
-
-    Buckets larger than ``max_bucket`` are dropped BEFORE the
-    self-join, bounding per-bucket candidate output at max_bucket² —
-    without this, one hot band bucket is an O(n²) blowup at 100 TB.
-    The window count shuffles on exactly the join key, so the
-    subsequent self-join reuses the same partitioning (no extra
-    exchange on the filtered side).
-    """
-    return _candidates_from_banded(_banded(sh, id_col), id_col, max_bucket)
-
-
 def _candidates_from_banded(
-    banded: DataFrame, id_col: str, max_bucket: int | None
+    banded: DataFrame, id_col: str, max_bucket: int
 ) -> DataFrame:
+    """LSH band-join candidate pairs (id_a < id_b) from (id, band_idx,
+    band_key) rows. Buckets larger than ``max_bucket`` are dropped
+    before any member array is built, bounding per-bucket candidate
+    output at max_bucket² — without this, one hot band bucket is an
+    O(n²) blowup at 100 TB."""
     # r11 (guide §2.4 — remove shuffles outright): bucket-collect +
     # in-bucket pair generation replaces the former window-cap +
     # sort-merge SELF-JOIN. The old shape recomputed the banded frame
@@ -327,20 +329,6 @@ def _candidates_from_banded(
     # bound in its own projection so the slice-per-element below
     # copies O(bucket) per outer element (pair-count work), not
     # re-sorts (the r10 interpreted-lambda O(n²) trap).
-    if max_bucket is None:
-        # Uncapped (ground-truth/recall arms only, doc-count guarded):
-        # a hot bucket's pair set must STREAM through the join, not
-        # materialize as one in-memory array — keep the self-join.
-        ca = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-        cb = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
-        return (
-            ca.join(cb, ["band_idx", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    from stakehouse_etl_spark.operators.buckets import drop_oversize_buckets
-
     buckets = (
         drop_oversize_buckets(banded, ["band_idx", "band_key"], max_bucket)
         .groupBy("band_idx", "band_key")
@@ -373,11 +361,13 @@ def lsh_candidates(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    max_bucket: int | None = LSH_MAX_BUCKET,
+    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Unverified LSH candidate pairs (for recall evaluation of the
     banding scheme against the exact join)."""
-    return _band_candidates(doc_shingles(df, text_col, id_col, k), id_col, max_bucket)
+    return _candidates_from_banded(
+        _banded(doc_shingles(df, text_col, id_col, k), id_col), id_col, max_bucket
+    )
 
 
 def lsh_bucket_stats(
@@ -413,68 +403,44 @@ def lsh_bucket_stats(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold_pct: int = 20,
-    max_bucket: int | None = LSH_MAX_BUCKET,
+def _verify_candidates(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_col: str,
+    threshold_pct: int,
+    set_col: str = "__set",
 ) -> DataFrame:
-    """Tier 3: MinHash + LSH banding → candidate pairs → exact Jaccard
-    verification of candidates only.
+    """The one exact-Jaccard verifier of the set-based tiers: candidate
+    (id_a, id_b) pairs join each side's (id, sorted shingle set
+    ``set_col``, count ``n_sh``) row, ``array_intersect`` counts the
+    overlap inside codegen, and the integer cross-multiplied threshold
+    keeps pairs with Jaccard >= ``threshold_pct``/100. Returns
+    (id_a, id_b, jaccard).
 
-    Bands of 4 rows; a pair is candidate iff some band's 4 signature
-    slots all match (joined on an md5 of the band values). At scale the
-    band join is an equi-join on (band_idx, band_key) — candidates are
-    a tiny fraction of all pairs; the exact-Jaccard rescoring join runs
-    only on them (left-semi pushdown of the candidate set).
-    """
-    # ONE pass over the exploded shingles: a single groupBy computes
-    # the signature mins AND the sorted shingle set AND the count
-    # (previously three separate groupBys — signatures plus both
-    # verify sides — each re-shuffling the exploded table). The
-    # persisted intermediate is the per-doc state (one row per doc),
-    # not the exploded shingles (one row per shingle) — at 100 TB
-    # that's the difference between caching ~10× the corpus and
-    # caching ~1× of it; at bench scale it removes two row-scale
-    # shuffles per run. MEMORY_AND_DISK: spills at scale; at 100 TB
-    # you would persist this as a real intermediate table anyway.
-    per_doc = persist_tracked(
-        _per_doc_state(doc_shingles(df, text_col, id_col, k), id_col)
-    )
-    candidates = _candidates_from_banded(
-        _banded_from_sig(per_doc, id_col), id_col, max_bucket
-    )
-    # Exact-verify CANDIDATES ONLY, set-based (same shape as the
-    # prefix-filter tier's verification): the bounded candidate list
-    # joins a sorted set onto each side, and `array_intersect` counts
-    # the overlap inside codegen — the corpus-wide all-pairs join of
-    # plain jaccard_pairs never materializes; that's the entire point
-    # of LSH at 100 TB.
-    # MERGE pin on the per-doc set sides (r8, replacing r5's
-    # SHUFFLE_HASH). Left free, AQE judges this side by COMPRESSED
-    # shuffle bytes — repetitive token sets compress so well that a
-    # multi-GB deserialized hash relation sneaks under the broadcast
-    # threshold and OOMs the driver (measured r5 at sf10). But
-    # SHUFFLE_HASH has the SAME trap one level down: the per-task
-    # LongToUnsafeRowMap holds its partition's slice of the doc-scale
-    # set table, and AQE sizes partitions by those same compressed
-    # bytes — so the deserialized build grows linearly with corpus
-    # size at any fixed partition count and OOM'd the executor heap
-    # at sf30 (r8, corpus_drop_ledger). Sort-merge is the only
-    # strategy whose memory is bounded at ANY scale (the external
-    # sorter spills), and it is not slower here: the sort key is the
-    # long id with the array as payload — measured r8 best-of-2,
-    # MERGE 2.67/10.05 s vs SHUFFLE_HASH 2.93/10.67 s at sf1/sf10.
-    sa = per_doc.select(
+    MERGE pin on both set sides (r8, replacing r5's SHUFFLE_HASH).
+    Left free, AQE judges a set side by COMPRESSED shuffle bytes —
+    repetitive token sets compress so well that a multi-GB
+    deserialized hash relation sneaks under the broadcast threshold
+    and OOMs the driver (measured r5 at sf10). SHUFFLE_HASH has the
+    SAME trap one level down: the per-task LongToUnsafeRowMap holds its
+    partition's slice of the doc-scale set table, and AQE sizes
+    partitions by those same compressed bytes — so the deserialized
+    build grows linearly with corpus size at any fixed partition count
+    and OOM'd the executor heap at sf30 (r8, corpus_drop_ledger).
+    Sort-merge is the only strategy whose memory is bounded at ANY
+    scale (the external sorter spills), and it is not slower here: the
+    sort key is the long id with the array as payload — measured r8
+    best-of-2, MERGE 2.67/10.05 s vs SHUFFLE_HASH 2.93/10.67 s at
+    sf1/sf10."""
+    sa = sets_a.select(
         F.col(id_col).alias("id_a"),
-        F.col("__set").alias("__set_a"),
+        F.col(set_col).alias("__set_a"),
         F.col("n_sh").alias("n_a"),
     ).hint("MERGE")
-    sb = per_doc.select(
+    sb = sets_b.select(
         F.col(id_col).alias("id_b"),
-        F.col("__set").alias("__set_b"),
+        F.col(set_col).alias("__set_b"),
         F.col("n_sh").alias("n_b"),
     ).hint("MERGE")
     return (
@@ -493,40 +459,52 @@ def minhash_lsh_pairs(
     )
 
 
-def near_dup_pairs(
+def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
     threshold_pct: int = 20,
-    tier: str = "lsh",
-    max_bucket: int | None = LSH_MAX_BUCKET,
+    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """The pluggable near-dup stage for composed pipelines.
+    """Tier 3: MinHash + LSH banding → candidate pairs → exact Jaccard
+    verification of candidates only.
 
-    ``tier='lsh'`` (DEFAULT) — capped MinHash-LSH banding + exact
-    verification of candidates only: the 100 TB path. Never builds the
-    corpus-wide shingle self-join, and one hot band bucket cannot blow
-    up the candidate count (``LSH_MAX_BUCKET`` drop, mirrored in the
-    SQL oracles via QUALIFY).
+    Bands of 4 rows; a pair is candidate iff some band's 4 signature
+    slots all match (bucketed on an md5 of the band values). Buckets
+    over ``max_bucket`` members are dropped before pair generation
+    (``LSH_MAX_BUCKET``, mirrored in the SQL oracles via QUALIFY), so
+    one hot band bucket cannot blow up the candidate count; the
+    exact-Jaccard verify runs on the candidates only. Never builds the
+    corpus-wide shingle self-join — that is :func:`jaccard_pairs`, the
+    ground truth this tier is checked against.
 
-    ``tier='exact'`` — the full shingle self-join (``jaccard_pairs``):
-    quadratic in per-shingle document frequency. Ground-truth/oracle
-    arm and recall-evaluation baseline ONLY; at scale a single
-    high-frequency shingle ("of the same"…) appearing in most
-    documents makes its postings self-join O(n²) in corpus size.
-
-    Both tiers emit the same ``(id_a, id_b, jaccard)`` schema with the
-    identical integer cross-multiplied threshold, so callers swap tiers
-    without downstream changes.
+    Also exported as ``near_dup_pairs``, the near-dup stage of the
+    composed corpus pipelines.
     """
-    if tier == "lsh":
-        return minhash_lsh_pairs(
-            df, text_col, id_col, k, threshold_pct, max_bucket
-        )
-    if tier == "exact":
-        return jaccard_pairs(df, text_col, id_col, k, threshold_pct)
-    raise ValueError(f"unknown near-dup tier: {tier!r}")
+    # ONE pass over the exploded shingles: a single groupBy computes
+    # the signature mins AND the sorted shingle set AND the count, so
+    # the exploded table is shuffled once. The
+    # persisted intermediate is the per-doc state (one row per doc),
+    # not the exploded shingles (one row per shingle) — at 100 TB
+    # that's the difference between caching ~10× the corpus and
+    # caching ~1× of it; at bench scale it removes two row-scale
+    # shuffles per run. MEMORY_AND_DISK: spills at scale; at 100 TB
+    # you would persist this as a real intermediate table anyway.
+    per_doc = persist_tracked(
+        _per_doc_state(doc_shingles(df, text_col, id_col, k), id_col)
+    )
+    candidates = _candidates_from_banded(
+        _banded_from_sig(per_doc, id_col), id_col, max_bucket
+    )
+    # Exact-verify CANDIDATES ONLY, set-based: the bounded candidate
+    # list joins a sorted set onto each side — the corpus-wide
+    # all-pairs join of plain jaccard_pairs never materializes; that's
+    # the entire point of LSH at 100 TB.
+    return _verify_candidates(candidates, per_doc, per_doc, id_col, threshold_pct)
+
+
+near_dup_pairs = minhash_lsh_pairs
 
 
 def prefix_filter_jaccard_pairs(
@@ -863,16 +841,11 @@ def prefix_filter_jaccard_pairs(
                 ]
             ),
         )
-    # Verification sets: lossless arm reads them straight off the
+    # Verification sets: the dense path reads them straight off the
     # persisted per-doc array (shingle order is irrelevant to
-    # array_intersect's SIZE); the capped arm builds them HERE — only
-    # reached when candidates exist — as one plain-shingle aggregation
-    # (no dfreq join needed for verification).
-    # MERGE pin: same rationale as minhash_lsh_pairs' verify — the
-    # doc-scale set side must never broadcast (compressed-size trap,
-    # r5 sf10 driver OOM) and must not hash-build either (the build
-    # map grows with corpus size at fixed partitions; executor OOM at
-    # sf30, r8). Sort-merge spills, and measured no slower here.
+    # array_intersect's SIZE); the sparse path builds them HERE — only
+    # reached when candidates exist. Verify is the shared
+    # _verify_candidates (MERGE-pinned set sides).
     if sets_src is None:
         # Sparse-path verify sets, only reached when candidates exist:
         # map-only off the persisted per-doc shingle arrays. The
@@ -889,24 +862,8 @@ def prefix_filter_jaccard_pairs(
                 F.filter("__sh_arr", lambda x: x != F.lit(""))
             ).cast("long").alias("n_sh"),
         )
-    sets = sets_src
-    sa = sets.select(
-        F.col(id_col).alias("id_a"), F.col("sh_set").alias("set_a"), F.col("n_sh").alias("n_a")
-    ).hint("MERGE")
-    sb = sets.select(
-        F.col(id_col).alias("id_b"), F.col("sh_set").alias("set_b"), F.col("n_sh").alias("n_b")
-    ).hint("MERGE")
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")).cast("long"))
-        .withColumn("union_sz", F.col("n_a") + F.col("n_b") - F.col("inter"))
-        .filter(F.col("inter") * 100 >= F.col("union_sz") * threshold_pct)
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("inter").cast("double") / F.col("union_sz")).alias("jaccard"),
-        )
+    return _verify_candidates(
+        candidates, sets_src, sets_src, id_col, threshold_pct, set_col="sh_set"
     )
 
 
@@ -1073,12 +1030,18 @@ def minhash_index_for(
     verification. Landing these at admission time is what makes
     :func:`incremental_minhash_dedup_indexed` batch-sized — the r8
     9-batch sf10 fuzz measured the recompute-the-corpus form growing
-    7.9 → 13.6 s/batch as the stored corpus reached 8× batch size."""
-    sh = persist_tracked(doc_shingles(batch, text_col, id_col, k))
-    bands = _banded(sh, id_col)
-    sets = sh.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("shingle")).alias("shingle_set"),
-        F.count(F.lit(1)).cast("long").alias("n_sh"),
+    7.9 → 13.6 s/batch as the stored corpus reached 8× batch size.
+
+    Both derive from the one per-doc state groupBy
+    (:func:`_per_doc_state`, the same state ``minhash_lsh_pairs``
+    verifies from); the persisted frame is that per-doc state, one
+    row per doc, not the exploded shingles."""
+    per_doc = persist_tracked(
+        _per_doc_state(doc_shingles(batch, text_col, id_col, k), id_col)
+    )
+    bands = _banded_from_sig(per_doc, id_col)
+    sets = per_doc.select(
+        F.col(id_col), F.col("__set").alias("shingle_set"), "n_sh"
     )
     return bands, sets
 
@@ -1091,7 +1054,7 @@ def incremental_minhash_dedup_indexed(
     batch_ids: DataFrame,
     id_col: str = "doc_id",
     threshold_pct: int = 20,
-    max_bucket: int | None = LSH_MAX_BUCKET,
+    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """:func:`incremental_minhash_dedup` against a STORED index — the
     100 TB shape its docstring promises: the corpus side arrives as
@@ -1104,290 +1067,101 @@ def incremental_minhash_dedup_indexed(
     stored rows equal what the recompute form derives from the same
     kept docs (the unchanged 3-stage oracle proves it at the gate).
 
-    Bucket cap applies to the UNION's buckets, exactly as before.
-    Returns the kept batch ids.
+    Bucket cap applies to the UNION's buckets. Returns the kept batch
+    ids.
     """
-    from stakehouse_etl_spark.operators.buckets import drop_oversize_buckets
-
     banded_c = corpus_bands.withColumn("__side", F.lit("c"))
     banded_b = batch_bands.withColumn("__side", F.lit("b"))
     allu = banded_c.unionByName(banded_b)
-    if max_bucket is None:
-        # Uncapped: a hot bucket's pairs must stream through a join,
-        # not materialize as one array (same split as
-        # _candidates_from_banded).
-        allb = drop_oversize_buckets(
-            allu, ["band_idx", "band_key"], max_bucket
+    # r11 (guide §2.4 — the bucket-collect form of
+    # _candidates_from_banded, side-aware): the former window-cap +
+    # union self-join shuffled the corpus∪batch band rows once per
+    # join side (two windows, two sorts, an SMJ) — at steady state that
+    # is two O(stored-state) shuffles per ingested batch. One groupBy
+    # builds each bucket once; the pair rule replays the join's
+    # predicate inside the sorted member array: for each batch-side
+    # member, every EARLIER member (lower id, either side) partners it,
+    # and later members partner it only from the corpus side. Ids are
+    # unique within a bucket (one row per doc per band; corpus and
+    # batch id sets are disjoint by the keep-set contract), so
+    # array_sort on (id, side) structs gives a strict id order and the
+    # generated pair set equals the join's exactly. r12 (VERDICT r11
+    # item 1): the cap is applied by the spillable WINDOW count BEFORE
+    # collect_list — the r11 size()-after-aggregate form materialized a
+    # hot bucket's entire member array in one unspillable aggregation
+    # buffer before dropping it. The window's partitioning is the
+    # groupBy's own key, so no second exchange; per-bucket arrays are
+    # bounded by the cap at the point they are built.
+    buckets = (
+        drop_oversize_buckets(allu, ["band_idx", "band_key"], max_bucket)
+        .groupBy("band_idx", "band_key")
+        .agg(
+            F.collect_list(
+                F.struct(F.col(id_col).alias("i"), F.col("__side").alias("s"))
+            ).alias("__ms")
         )
-        new = allb.filter(F.col("__side") == "b").select(
-            F.col(id_col).alias("id_new"), "band_idx", "band_key"
-        )
-        partner = allb.select(
-            F.col(id_col).alias("id_old"),
-            F.col("__side").alias("side_old"),
-            "band_idx",
-            "band_key",
-        )
-        cand = (
-            new.join(partner, ["band_idx", "band_key"])
-            .filter(
-                (F.col("side_old") == "c")
-                | (
-                    (F.col("side_old") == "b")
-                    & (F.col("id_old") < F.col("id_new"))
-                )
-            )
-            .select("id_new", "id_old")
-            .distinct()
-        )
-    else:
-        # r11 (guide §2.4 — the bucket-collect form of
-        # _candidates_from_banded, side-aware): the former window-cap
-        # + union self-join shuffled the corpus∪batch band rows once
-        # per join side (two windows, two sorts, an SMJ) — at steady
-        # state that is two O(stored-state) shuffles per ingested
-        # batch. One groupBy builds each bucket once; the pair
-        # rule replays the join's predicate inside the sorted member
-        # array: for each batch-side member, every EARLIER member
-        # (lower id, either side) partners it, and later members
-        # partner it only from the corpus side. Ids are unique within
-        # a bucket (one row per doc per band; corpus and batch id
-        # sets are disjoint by the keep-set contract), so array_sort
-        # on (id, side) structs gives a strict id order and the
-        # generated pair set equals the join's exactly. r12 (VERDICT
-        # r11 item 1): the cap is applied by the spillable WINDOW
-        # count BEFORE collect_list — the r11 size()-after-aggregate
-        # form materialized a hot bucket's entire member array in one
-        # unspillable aggregation buffer before dropping it. The
-        # window's partitioning is the groupBy's own key, so no second
-        # exchange; per-bucket arrays are bounded by the cap at the
-        # point they are built.
-        buckets = (
-            drop_oversize_buckets(allu, ["band_idx", "band_key"], max_bucket)
-            .groupBy("band_idx", "band_key")
-            .agg(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("__side").alias("s"))
-                ).alias("__ms")
-            )
-            .select(F.array_sort("__ms").alias("__ms"))
-        )
-        ms = F.col("__ms")
+        .select(F.array_sort("__ms").alias("__ms"))
+    )
+    ms = F.col("__ms")
 
-        def _pair_with(x):
-            return lambda y: F.struct(
-                x["i"].alias("id_new"), y["i"].alias("id_old")
-            )
+    def _pair_with(x):
+        # id_a = the partner (old), id_b = the batch doc (new): the
+        # orientation _verify_candidates joins in (partner side first).
+        return lambda y: F.struct(y["i"].alias("id_a"), x["i"].alias("id_b"))
 
-        pairs = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.concat(
-                    # members BEFORE x (id_old < id_new, either side):
-                    # partners only when x is batch-side — slice
-                    # length 0 otherwise.
-                    F.transform(
+    pairs = F.flatten(
+        F.transform(
+            ms,
+            lambda x, i: F.concat(
+                # members BEFORE x (lower id, either side): partners
+                # only when x is batch-side — slice length 0 otherwise.
+                F.transform(
+                    F.slice(
+                        ms,
+                        1,
+                        F.when(x["s"] == "b", i).otherwise(F.lit(0)),
+                    ),
+                    _pair_with(x),
+                ),
+                # corpus members AFTER x (corpus partners pair
+                # regardless of id order).
+                F.transform(
+                    F.filter(
                         F.slice(
                             ms,
-                            1,
-                            F.when(x["s"] == "b", i).otherwise(F.lit(0)),
+                            i + 2,
+                            F.when(
+                                x["s"] == "b",
+                                F.greatest(F.size(ms) - i - 1, F.lit(0)),
+                            ).otherwise(F.lit(0)),
                         ),
-                        _pair_with(x),
+                        lambda y: y["s"] == F.lit("c"),
                     ),
-                    # corpus members AFTER x (corpus partners pair
-                    # regardless of id order).
-                    F.transform(
-                        F.filter(
-                            F.slice(
-                                ms,
-                                i + 2,
-                                F.when(
-                                    x["s"] == "b",
-                                    F.greatest(
-                                        F.size(ms) - i - 1, F.lit(0)
-                                    ),
-                                ).otherwise(F.lit(0)),
-                            ),
-                            lambda y: y["s"] == F.lit("c"),
-                        ),
-                        _pair_with(x),
-                    ),
+                    _pair_with(x),
                 ),
-            )
+            ),
         )
-        cand = (
-            buckets.select(F.explode(pairs).alias("__p"))
-            .select(
-                F.col("__p.id_new").alias("id_new"),
-                F.col("__p.id_old").alias("id_old"),
-            )
-            .distinct()
+    )
+    cand = (
+        buckets.select(F.explode(pairs).alias("__p"))
+        .select(
+            F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b")
         )
-    sets = corpus_sets.unionByName(batch_sets)
-    so = sets.select(
-        F.col(id_col).alias("id_old"),
-        F.col("shingle_set").alias("__set_o"),
-        F.col("n_sh").alias("n_old"),
-    ).hint("MERGE")
-    sn = batch_sets.select(
-        F.col(id_col).alias("id_new"),
-        F.col("shingle_set").alias("__set_n"),
-        F.col("n_sh").alias("n_new"),
-    ).hint("MERGE")
+        .distinct()
+    )
     drops = (
-        cand.join(so, "id_old")
-        .join(sn, "id_new")
-        .withColumn(
-            "inter",
-            F.size(F.array_intersect("__set_o", "__set_n")).cast("long"),
+        _verify_candidates(
+            cand,
+            corpus_sets.unionByName(batch_sets),
+            batch_sets,
+            id_col,
+            threshold_pct,
+            set_col="shingle_set",
         )
-        .withColumn(
-            "union_sz", F.col("n_new") + F.col("n_old") - F.col("inter")
-        )
-        .filter(F.col("inter") * 100 >= F.col("union_sz") * threshold_pct)
-        .select("id_new")
+        .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    return (
-        batch_ids.select(id_col)
-        .distinct()
-        .join(
-            drops.withColumnRenamed("id_new", id_col), id_col, "left_anti"
-        )
-    )
-
-
-def incremental_minhash_dedup_probed(
-    corpus_bands: DataFrame,
-    corpus_sets: DataFrame,
-    batch_bands: DataFrame,
-    batch_sets: DataFrame,
-    batch_ids: DataFrame,
-    id_col: str = "doc_id",
-    threshold_pct: int = 20,
-    max_bucket: int | None = LSH_MAX_BUCKET,
-) -> DataFrame:
-    """:func:`incremental_minhash_dedup_indexed` restructured so a
-    BUCKETED stored index is probed without a single state-sized
-    shuffle per batch (the r9 20-batch fuzz measured the indexed
-    form's per-batch wall rising ~+1.5%/batch — the O(state) shuffles
-    hiding in the union window and union joins):
-
-    - the hot-bucket cap no longer runs a window over corpus∪batch
-      bands (a full state shuffle every batch): corpus-side bucket
-      counts come from a groupBy over the bucketed band table (bucket
-      layout satisfies the agg's distribution — NO exchange), merged
-      with the batch's own counts via a full-outer join on the same
-      layout, and the resulting over-cap key set — tiny by
-      construction (only buckets > cap) — is BROADCAST anti-joined
-      against both band streams;
-    - candidate generation and verify are SPLIT per side instead of
-      probing a union (a union erases the bucketed layout): new ⨝
-      corpus_bands reuses the (band_idx, band_key) bucketing, new ⨝
-      lower-id batch bands is batch-scale; verify joins corpus pairs
-      against the doc_id-bucketed set table and batch pairs against
-      the batch's own sets. Corpus/batch partner sets are disjoint
-      (corpus ids are prior-batch keeps), so the split is exact.
-
-    Value-identical to the window form: counts are computed from the
-    same uncapped tables, the anti-join drops exactly the rows the
-    window filter dropped, and the split joins cover exactly the
-    partner sets of the union join. Callers hand ``corpus_bands`` /
-    ``corpus_sets`` from bucketed catalog tables to get the
-    shuffle-free plan; with plain frames the semantics are unchanged
-    and the plan degrades to the indexed form's.
-    """
-    keys = ["band_idx", "band_key"]
-    ccnt = corpus_bands.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("__cc")
-    )
-    bcnt = batch_bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bc"))
-    if max_bucket is not None:
-        overcap = (
-            ccnt.join(bcnt, keys, "full_outer")
-            .filter(
-                F.coalesce(F.col("__cc"), F.lit(0))
-                + F.coalesce(F.col("__bc"), F.lit(0))
-                > max_bucket
-            )
-            .select(*keys)
-        )
-        # The over-cap key set is tiny on measured corpora, but its
-        # only hard bound is total_rows/max_bucket — under extreme
-        # skew a pinned broadcast could OOM the driver (ADVICE r9).
-        # Guard with an actual count (one cheap job over the already-
-        # aggregated counts) and fall back to a MERGE anti-join, the
-        # same bounded-memory strategy the verify joins pin.
-        overcap = persist_tracked(overcap)
-        n_overcap = overcap.count()
-        if n_overcap <= 2_000_000:
-            oc_b, oc_c = F.broadcast(overcap), F.broadcast(overcap)
-        else:
-            oc_b, oc_c = overcap.hint("MERGE"), overcap.hint("MERGE")
-        bb = batch_bands.join(oc_b, keys, "left_anti")
-        cb = corpus_bands.join(oc_c, keys, "left_anti")
-    else:
-        bb = batch_bands
-        cb = corpus_bands
-    new = bb.select(F.col(id_col).alias("id_new"), *keys)
-    cand_c = (
-        new.join(
-            cb.select(F.col(id_col).alias("id_old"), *keys), keys
-        )
-        .select("id_new", "id_old")
-        .distinct()
-    )
-    cand_b = (
-        new.join(
-            bb.select(F.col(id_col).alias("id_old"), *keys), keys
-        )
-        .filter(F.col("id_old") < F.col("id_new"))
-        .select("id_new", "id_old")
-        .distinct()
-    )
-
-    def _verify(cand: DataFrame, old_sets: DataFrame) -> DataFrame:
-        so = old_sets.select(
-            F.col(id_col).alias("id_old"),
-            F.col("shingle_set").alias("__set_o"),
-            F.col("n_sh").alias("n_old"),
-        ).hint("MERGE")
-        sn = batch_sets.select(
-            F.col(id_col).alias("id_new"),
-            F.col("shingle_set").alias("__set_n"),
-            F.col("n_sh").alias("n_new"),
-        ).hint("MERGE")
-        return (
-            cand.join(so, "id_old")
-            .join(sn, "id_new")
-            .withColumn(
-                "inter",
-                F.size(F.array_intersect("__set_o", "__set_n")).cast(
-                    "long"
-                ),
-            )
-            .withColumn(
-                "union_sz",
-                F.col("n_new") + F.col("n_old") - F.col("inter"),
-            )
-            .filter(
-                F.col("inter") * 100 >= F.col("union_sz") * threshold_pct
-            )
-            .select("id_new")
-        )
-
-    drops = (
-        _verify(cand_c, corpus_sets)
-        .unionByName(_verify(cand_b, batch_sets))
-        .distinct()
-    )
-    return (
-        batch_ids.select(id_col)
-        .distinct()
-        .join(
-            drops.withColumnRenamed("id_new", id_col), id_col, "left_anti"
-        )
-    )
+    return batch_ids.select(id_col).distinct().join(drops, id_col, "left_anti")
 
 
 def incremental_minhash_dedup(
@@ -1397,7 +1171,7 @@ def incremental_minhash_dedup(
     id_col: str = "doc_id",
     k: int = 3,
     threshold_pct: int = 20,
-    max_bucket: int | None = LSH_MAX_BUCKET,
+    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Incremental dedup — the PRODUCTION shape of corpus maintenance:
     a new crawl ``batch`` deduped against the already-kept ``corpus``
@@ -1410,8 +1184,8 @@ def incremental_minhash_dedup(
     >= threshold partner are dropped. Returns the KEPT batch ids.
 
     At 100 TB the corpus side is a precomputed band-signature index
-    (store ``_banded``'s output as a table keyed by (band_idx,
-    band_key)); each nightly batch then shuffles only its own bands
+    (store :func:`minhash_index_for`'s bands as a table keyed by
+    (band_idx, band_key)); each nightly batch then shuffles only its own bands
     plus the collided corpus buckets. Bucket cap applies to the
     UNION's buckets — mirrored by the oracle's global QUALIFY.
 

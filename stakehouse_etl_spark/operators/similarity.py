@@ -492,65 +492,33 @@ def ann_lsh_pairs(
     min_cosine: float,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    max_bucket: int | None = ANN_MAX_BUCKET,
+    max_bucket: int = ANN_MAX_BUCKET,
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed: exact cosine computed
     only within buckets — at 100 TB each vector shuffles once on its
     bucket key; no cross join ever materializes. Buckets above
     ``max_bucket`` members are dropped before pair generation (bounds
-    per-bucket output at max_bucket²); the capped arm then collects
-    each surviving bucket once and emits i<j pairs from the id-sorted
-    member array (one exchange; the uncapped arm keeps a streaming
-    self-join).
+    per-bucket output at max_bucket²); each surviving bucket is then
+    collected once and i<j pairs are emitted from the id-sorted member
+    array (one exchange).
 
     Recall is governed by N_PLANES (8 → ~|cos| high pairs collide with
     good probability); run multiple plane-sets and union for higher
     recall — same plan shape.
 
-    PRECONDITIONS (ADVICE r11): ``id_col`` must be unique — the capped
-    arm's position-order pair generation relies on it (duplicate-id
-    input would emit id_a == id_b self-pairs the uncapped arm's
-    ``id_a < id_b`` self-join excludes, diverging the two arms).
-    ``max_bucket`` also bounds the capped arm's per-row memory at
-    O(max_bucket·dim) — ~0.5 MB at the default 1000; callers passing a
-    much larger cap (≳10k) should use the uncapped join arm
-    (``max_bucket=None`` plus their own pre-filter) instead of this
-    collected form.
+    PRECONDITIONS (ADVICE r11): ``id_col`` must be unique — the
+    position-order pair generation relies on it (duplicate-id input
+    would emit id_a == id_b self-pairs). ``max_bucket`` also bounds the
+    per-row memory at O(max_bucket·dim) — ~0.5 MB at the default 1000;
+    a much larger cap (≳10k) makes each collected bucket row large, so
+    pre-filter the input instead of raising the cap that far.
     """
     from stakehouse_etl_spark.operators.buckets import drop_oversize_buckets
 
     b = drop_oversize_buckets(
         hyperplane_buckets(embeddings, id_col, emb_col), ["bucket"], max_bucket
     )
-    if max_bucket is None:
-        # Uncapped (test/ground-truth arm): a hot bucket's pair set
-        # must STREAM through the join, never materialize as one
-        # in-memory array — keep the self-join.
-        left = b.select(
-            F.col(id_col).alias("id_a"),
-            F.col("q_emb").alias("emb_a"),
-            F.col("norm").alias("norm_a"),
-            "bucket",
-        )
-        right = b.select(
-            F.col(id_col).alias("id_b"),
-            F.col("q_emb").alias("emb_b"),
-            F.col("norm").alias("norm_b"),
-            "bucket",
-        )
-        return (
-            left.join(right, "bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("dot", int_dot(F.col("emb_a"), F.col("emb_b")))
-            .withColumn(
-                "cos_sim",
-                cosine(F.col("dot"), F.col("norm_a"), F.col("norm_b")),
-            )
-            .filter(F.col("cos_sim") >= min_cosine)
-            .select("id_a", "id_b", "cos_sim")
-            .distinct()
-        )
-    # Capped arm (r11, guide §2.3/§2.4): bucket-collect + in-bucket
+    # r11 (guide §2.3/§2.4): bucket-collect + in-bucket
     # pair generation replaces the bucket-keyed SELF-JOIN. The old
     # shape recomputed the bucketed frame per join side — the scan,
     # the quantize, and all 8 interpreted hyperplane dots ran TWICE —

@@ -33,7 +33,7 @@ PR_BASE = (15 * PR_SCALE) // 100  # (1-d) * SCALE, precomputed (INT32-literal-sa
 
 # Edges come from the CAPPED LSH tier, not the exact shingle
 # self-join: composed pipelines never ride the lossless quadratic arm
-# (tier contract, operators/dedup.py:near_dup_pairs) — the round-6
+# (operators/dedup.py:near_dup_pairs is the capped tier) — the round-6
 # sf10 fuzz killed the exact-tier form in GC (its postings self-join
 # AQE-broadcast a >1 GB build at 500k docs).
 _PR_EDGES_CTE = f"""

@@ -149,9 +149,9 @@ if len(QUERIES) < EXPECTED_MIN_QUERIES:
 # changed-code repeats (BOTH prefix-filter arms: the operator gained
 # the posting-mass tier dispatch, the sparse saturated path, and the
 # empty-candidate short-circuit; all THREE streaming index arms:
-# plain dedup gained periodic band/set-index compaction, the probed
-# bucketed dedup gained the counted over-cap broadcast guard, and the
-# bucketed span scrub was split into a crash-resumable core with
+# plain dedup gained periodic band/set-index compaction, the
+# bucketed dedup arm now probes through the same indexed kernel, and
+# the bucketed span scrub was split into a crash-resumable core with
 # compaction disk reclaim) + 38 FIRST-TIME entries spread across the
 # portable-SQL / set-op / scalar / sink / join / window / aggregate /
 # time-series / ML / DQ / graph / corpus / dedup / streaming /

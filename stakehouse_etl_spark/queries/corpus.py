@@ -216,9 +216,9 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped MinHash-LSH candidates, exact-verified at Jaccard ≥ 0.2 →
     connected components → keep the component minimum. Returns the
     kept corpus ids. Stages (1)(2) are scan + one hash-shuffle; (3)
-    runs the SCALE-SAFE tier (``near_dup_pairs`` tier='lsh': band
-    equi-join with the over-full-bucket drop, never the corpus-wide
-    shingle self-join) on the already-thinned survivor set — the
+    runs the SCALE-SAFE tier (``near_dup_pairs``, the capped
+    MinHash-LSH tier: band buckets with the over-full-bucket drop,
+    never the corpus-wide shingle self-join) on the already-thinned survivor set — the
     right cost order at 100 TB. The exact-Jaccard tier stays
     available as the oracle/recall arm (``dedup_jaccard_pairs``)."""
     docs = load_table(spark, sf_dir, "documents")

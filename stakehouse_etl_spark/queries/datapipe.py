@@ -266,8 +266,8 @@ def _lsh_jaccard_cte(max_bucket: int = LSH_MAX_BUCKET) -> str:
     composed corpus pipelines default to. Requires ``s2`` (doc_id,
     shingle) and ``c`` (doc_id, n_sh) CTEs in scope, i.e. the
     ``_SHINGLES_CTE`` shape. Mirrors ``operators.dedup.near_dup_pairs``
-    tier='lsh': identical signatures, identical QUALIFY bucket cap,
-    candidates-only intersection."""
+    (= ``minhash_lsh_pairs``): identical signatures, identical QUALIFY
+    bucket cap, candidates-only intersection."""
     return f"""{_minhash_sig_sql()},
 {_minhash_bands_sql(max_bucket)},
 cand AS (
@@ -909,7 +909,7 @@ def incremental_dedup_run(
     mid-batch state the per-batch overwrite retry path exists for)."""
     import os
 
-    from stakehouse_etl_spark.caches import cache_scope, persist_tracked
+    from stakehouse_etl_spark.caches import cache_scope
     from stakehouse_etl_spark.operators.dedup import (
         incremental_minhash_dedup_indexed,
         minhash_index_for,
@@ -967,17 +967,15 @@ def incremental_dedup_run(
                 [],
                 "doc_id long, shingle_set array<string>, n_sh long",
             )
-        # cache_scope: the per-batch persists (the batch shingle
-        # table) release at batch end — on a 9-batch horizon the
+        # cache_scope: the per-batch persist (the batch's per-doc
+        # MinHash state) releases at batch end — on a 9-batch horizon the
         # old leak-until-session-clear shape held 2 frames/batch.
         with cache_scope():
-            batch_bands, batch_sets = minhash_index_for(batch_df)
             # Three actions consume these (the kept_ids write and
-            # the two index landings); persisted, the banding /
-            # set-collection shuffles run once per batch instead
-            # of three times (review r8).
-            batch_bands = persist_tracked(batch_bands)
-            batch_sets = persist_tracked(batch_sets)
+            # the two index landings); minhash_index_for persists
+            # the per-doc state both derive from, so the shingling
+            # shuffle runs once per batch instead of three times.
+            batch_bands, batch_sets = minhash_index_for(batch_df)
             kept_ids = incremental_minhash_dedup_indexed(
                 corpus_bands,
                 corpus_sets,
@@ -1061,33 +1059,21 @@ def stream_incremental_dedup_bucketed_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``stream_incremental_dedup`` with BOTH stored index tables
-    landed as bucketed catalog tables and the probe restructured
-    (``incremental_minhash_dedup_probed``) so the per-batch plan has
-    no state-sized EXCHANGE: the band table is bucketed on (band_idx,
-    band_key), the set table on doc_id, and the hot-bucket cap is a
-    shuffle-free bucketed count + broadcast anti-join of the over-cap
-    keys instead of a window over corpus∪batch.
-
-    MEASURED NEGATIVE RESULT (r9, kept as the documented experiment —
-    the PLAIN arm remains the recommended form): at the 20-batch sf10
-    horizon this arm's per-batch wall GROWS +7.7%/batch (10 → 38 s)
-    while the plain arm stays flat (~5.5 s). Removing the exchange is
-    not the win here: the plain form's union window plus both join
-    consumers share ONE pass over the state via exchange reuse,
-    whereas the split probe makes TWO full passes (the count agg and
-    the candidate join's sort) — static plans: 31 exchanges/27 sorts
-    vs the window form's 15/11. Bucketing pays when it REMOVES a pass
-    (the span arm's redundant per-batch distinct), not when the
-    restructure adds one. Value-identical throughout (same oracle,
-    equivalence + cap-exactness pinned in tests/test_bucketed_index)."""
+    landed as bucketed catalog tables — the band table bucketed on
+    (band_idx, band_key), the set table on doc_id — and each batch
+    probed through the same kernel as the plain arm
+    (``incremental_minhash_dedup_indexed``: one capped bucket-collect
+    over corpus∪batch bands, one exact-Jaccard verify). Value-identical
+    to the plain arm (same oracle; equivalence pinned in
+    tests/test_bucketed_index)."""
     import os
     import shutil
     import tempfile
     import uuid
 
-    from stakehouse_etl_spark.caches import cache_scope, persist_tracked
+    from stakehouse_etl_spark.caches import cache_scope
     from stakehouse_etl_spark.operators.dedup import (
-        incremental_minhash_dedup_probed,
+        incremental_minhash_dedup_indexed,
         minhash_index_for,
     )
     from stakehouse_etl_spark.streaming.staging import stage_id_range_batches
@@ -1133,9 +1119,7 @@ def stream_incremental_dedup_bucketed_q(
                 )
             with cache_scope():
                 batch_bands, batch_sets = minhash_index_for(batch_df)
-                batch_bands = persist_tracked(batch_bands)
-                batch_sets = persist_tracked(batch_sets)
-                kept_ids = incremental_minhash_dedup_probed(
+                kept_ids = incremental_minhash_dedup_indexed(
                     corpus_bands,
                     corpus_sets,
                     batch_bands,

@@ -135,19 +135,19 @@ def test_bucketed_dedup_arm_matches_plain_arm(spark, sf_dir):
     assert plain == bucketed
 
 
-def test_probed_core_caps_exactly_like_the_window_form(spark):
-    """The probed core's count+broadcast-anti-join cap must drop
-    exactly the rows the union-window form drops — build a corpus with
-    one over-cap band bucket and assert both forms keep the same ids.
+def test_probed_core_caps_exactly_like_the_window_form(spark, tmp_path):
+    """The bucketed dedup arm probes its stored index through the
+    window-capped kernel: fed the corpus side from bucketed catalog
+    tables (laid out as ``stream_incremental_dedup_bucketed`` lands
+    them), the cap must drop exactly the rows it drops on plain frames
+    — build a corpus with one over-cap band bucket and assert both
+    inputs keep the same ids.
     """
-    from pyspark.sql import functions as F
-
     from stakehouse_etl_spark.operators.dedup import (
         incremental_minhash_dedup_indexed,
-        incremental_minhash_dedup_probed,
     )
 
-    # 6 corpus docs + 2 batch docs share band ("b", "hot") → bucket of
+    # 6 corpus docs + 2 batch docs share band (0, "hot") → bucket of
     # 8 > cap 5; one other bucket stays under cap and verifies a real
     # near-dup pair (identical singleton sets → Jaccard 100).
     cb = spark.createDataFrame(
@@ -167,19 +167,45 @@ def test_probed_core_caps_exactly_like_the_window_form(spark):
         "doc_id long, shingle_set array<string>, n_sh long",
     )
     ids = spark.createDataFrame([(10,), (11,), (12,)], "doc_id long")
-    args = dict(threshold_pct=20, max_bucket=5)
-    window_form = {
-        r["doc_id"]
-        for r in incremental_minhash_dedup_indexed(
-            cb, cs, bb, bs, ids, **args
-        ).collect()
-    }
-    probed_form = {
-        r["doc_id"]
-        for r in incremental_minhash_dedup_probed(
-            cb, cs, bb, bs, ids, **args
-        ).collect()
-    }
+
+    tag = uuid.uuid4().hex[:12]
+    bands_tbl, sets_tbl = f"test_bands_{tag}", f"test_sets_{tag}"
+    try:
+        cb.withColumn("bno", F.lit(0)).write.partitionBy("bno").bucketBy(
+            4, "band_idx", "band_key"
+        ).sortBy("band_idx", "band_key").option(
+            "path", str(tmp_path / "bands")
+        ).saveAsTable(bands_tbl)
+        cs.withColumn("bno", F.lit(0)).write.partitionBy("bno").bucketBy(
+            4, "doc_id"
+        ).sortBy("doc_id").option("path", str(tmp_path / "sets")).saveAsTable(
+            sets_tbl
+        )
+        args = dict(threshold_pct=20, max_bucket=5)
+        window_form = {
+            r["doc_id"]
+            for r in incremental_minhash_dedup_indexed(
+                cb, cs, bb, bs, ids, **args
+            ).collect()
+        }
+        probed_form = {
+            r["doc_id"]
+            for r in incremental_minhash_dedup_indexed(
+                spark.table(bands_tbl)
+                .filter(F.col("bno") < 1)
+                .select("doc_id", "band_idx", "band_key"),
+                spark.table(sets_tbl)
+                .filter(F.col("bno") < 1)
+                .select("doc_id", "shingle_set", "n_sh"),
+                bb,
+                bs,
+                ids,
+                **args,
+            ).collect()
+        }
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {bands_tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {sets_tbl}")
     # hot bucket capped → docs 10/11 keep (no candidates); cold bucket
     # under cap → doc 12 verified against doc 6 (J=1.0 ≥ 0.2) → drop.
     assert window_form == {10, 11}

@@ -125,12 +125,15 @@ def test_rank_kernels_on_singleton_and_empty(spark):
 
 def test_near_dup_pairs_empty_and_tiny_inputs(spark):
     """Empty corpus and sub-shingle-length docs produce zero pairs,
-    not errors, on both tiers."""
-    from stakehouse_etl_spark.operators.dedup import near_dup_pairs
+    not errors, on the LSH tier and the exact self-join."""
+    from stakehouse_etl_spark.operators.dedup import (
+        jaccard_pairs,
+        near_dup_pairs,
+    )
 
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert near_dup_pairs(empty).count() == 0
-    assert near_dup_pairs(empty, tier="exact").count() == 0
+    assert jaccard_pairs(empty).count() == 0
     tiny = spark.createDataFrame(
         [(1, "one two"), (2, "three")], "doc_id long, text string"
     )  # < 3 tokens -> no shingles

@@ -2,12 +2,14 @@
 
 A degenerate bucket — one band key shared by a huge duplicate cluster,
 or one hyperplane bucket holding half the corpus — must not produce
-O(n²) candidate pairs. The cap drops over-full buckets BEFORE the
-self-join; these tests build synthetic hot buckets and assert the
+O(n²) candidate pairs. The cap drops over-full buckets BEFORE pair
+generation; these tests build synthetic hot buckets and assert the
 candidate set is bounded (and that cool buckets are unaffected).
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,8 +37,9 @@ def hot_docs(spark):
 
 
 def test_hot_band_bucket_dropped(spark, hot_docs):
-    # Uncapped: the duplicate cluster alone yields C(60,2) = 1770 pairs.
-    uncapped = lsh_candidates(hot_docs, max_bucket=None).count()
+    # Default cap (1000 > 60 members): the duplicate cluster alone
+    # yields C(60,2) = 1770 pairs.
+    uncapped = lsh_candidates(hot_docs).count()
     assert uncapped >= 1770
     # Capped at 10: the 60-member buckets are dropped entirely; only
     # the cool pair(s) survive. Bound: every surviving bucket has ≤ 10
@@ -74,7 +77,8 @@ def test_ann_hot_bucket_dropped(spark):
     near2 = [-1.0, 0.012] + [0.0] * (dim - 2)
     rows = [(i, base) for i in range(50)] + [(100, near), (101, near2)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    uncapped = ann_lsh_pairs(emb, min_cosine=0.9, max_bucket=None).count()
+    # Default cap (1000 > 50 members): the hot bucket pairs in full.
+    uncapped = ann_lsh_pairs(emb, min_cosine=0.9).count()
     assert uncapped >= 50 * 49 // 2
     capped = ann_lsh_pairs(emb, min_cosine=0.9, max_bucket=10)
     got = {(r.id_a, r.id_b) for r in capped.collect()}
@@ -108,9 +112,9 @@ def test_incremental_dedup_corpus_wins_and_batch_greedy(spark):
 
 def test_near_dup_pairs_defaults_to_capped_lsh_tier(spark):
     """VERDICT r2 'what's wrong' #1: the composed pipelines' near-dup
-    stage (near_dup_pairs) must default to the capped LSH tier, with
-    the exact shingle self-join available only as the opt-in oracle
-    arm. Boilerplate-heavy corpus: every doc is the same boilerplate
+    stage (near_dup_pairs) is the capped LSH tier, with the exact
+    shingle self-join (jaccard_pairs) kept as the separate oracle
+    operator. Boilerplate-heavy corpus: every doc is the same boilerplate
     plus a tiny unique tail — all near-identical (exact tier emits
     C(n,2) pairs), and all landing in the same hot band buckets."""
     from stakehouse_etl_spark.operators.dedup import (
@@ -126,32 +130,21 @@ def test_near_dup_pairs_defaults_to_capped_lsh_tier(spark):
     rows = [(i, boiler + f"unique{i}") for i in range(n)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    # Ground truth: the exact tier's output here is quadratic — every
-    # pair clears Jaccard >= 0.2 (shared boilerplate dominates).
+    # Ground truth: the exact self-join's output here is quadratic —
+    # every pair clears Jaccard >= 0.2 (shared boilerplate dominates).
     exact = jaccard_pairs(docs, threshold_pct=20).count()
     assert exact == n * (n - 1) // 2
 
-    # Default tier (what pipeline_corpus_clean / corpus_canonical_docs
-    # / corpus_drop_ledger now call): capped LSH. With a small cap the
-    # hot band buckets are dropped pre-join -> bounded pair output,
-    # never C(n,2).
+    # The near-dup stage (what pipeline_corpus_clean /
+    # corpus_canonical_docs / corpus_drop_ledger call): capped LSH.
+    # With a small cap the hot band buckets are dropped before pair
+    # generation -> bounded pair output, never C(n,2).
     capped = near_dup_pairs(docs, threshold_pct=20, max_bucket=10).count()
     assert capped < exact
     assert capped <= 4 * (10 * 9 // 2)  # <= bands * C(cap,2)
 
-    # Tier equivalence contracts: default == 'lsh' arm; 'exact' arm is
-    # still reachable for oracle/recall evaluation.
-    from stakehouse_etl_spark.operators.dedup import minhash_lsh_pairs
-
-    d = {(r.id_a, r.id_b) for r in near_dup_pairs(docs, max_bucket=10).collect()}
-    l = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, max_bucket=10).collect()}
-    assert d == l
-    e = near_dup_pairs(docs, threshold_pct=20, tier="exact").count()
-    assert e == exact
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        near_dup_pairs(docs, tier="bogus")
+    # near_dup_pairs is the MinHash-LSH tier itself, not a dispatcher.
+    assert near_dup_pairs is minhash_lsh_pairs
 
 
 def test_prefix_filter_df_cap_bounds_candidates(spark):
@@ -331,20 +324,18 @@ def test_capped_bucket_collect_caps_before_collect(spark, hot_docs):
     the member array — the size()-after-aggregate form materialized a
     hot bucket's entire id list in one unspillable aggregation buffer,
     an executor-OOM hazard on exactly the skewed input the cap exists
-    for. Pin the plan: the window-cap filter (__bsz) is present, the
-    post-collect size() filter is gone."""
+    for. Pin the plan: the window-cap count (__bsz) sits below the
+    collect_list aggregate, and no post-collect size() filter exists."""
     plan = (
         lsh_candidates(hot_docs, max_bucket=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "__bsz" in plan, "window cap missing from the capped arm"
+    _assert_cap_below_collect(plan)
     # The pair generator legitimately reads size(__ids) inside its
     # slice lambda; the hazard is specifically a FILTER on the
     # collected array's size (i.e. cap applied after materialization).
-    import re
-
     assert not re.search(r"Filter \(?size\(__ids", plan), (
         "post-collect size() cap reintroduced — hot buckets would "
         "materialize before the filter"
@@ -354,33 +345,60 @@ def test_capped_bucket_collect_caps_before_collect(spark, hot_docs):
 def test_incremental_bucket_collect_caps_before_collect(spark):
     """Same pin for the side-aware incremental kernel (dedup.py
     incremental_minhash_dedup_indexed): cap via window before the
-    member-struct collect_list."""
+    member-struct collect_list, and the cap drops exactly the union
+    bucket's rows — 6 corpus docs + 2 batch docs share band (0, "hot")
+    → bucket of 8 > cap 5; one other bucket stays under cap and
+    verifies a real near-dup pair (identical singleton sets → Jaccard
+    100)."""
     from stakehouse_etl_spark.operators.dedup import (
         incremental_minhash_dedup_indexed,
     )
 
     cb = spark.createDataFrame(
-        [(i, 0, "hot") for i in range(6)],
+        [(i, 0, "hot") for i in range(6)] + [(6, 1, "cold")],
         "doc_id long, band_idx int, band_key string",
     )
     cs = spark.createDataFrame(
-        [(i, ["x"], 1) for i in range(6)],
+        [(i, ["x"], 1) for i in range(7)],
         "doc_id long, shingle_set array<string>, n_sh long",
     )
     bb = spark.createDataFrame(
-        [(10, 0, "hot")], "doc_id long, band_idx int, band_key string"
+        [(10, 0, "hot"), (11, 0, "hot"), (12, 1, "cold")],
+        "doc_id long, band_idx int, band_key string",
     )
     bs = spark.createDataFrame(
-        [(10, ["x"], 1)], "doc_id long, shingle_set array<string>, n_sh long"
+        [(10, ["x"], 1), (11, ["x"], 1), (12, ["x"], 1)],
+        "doc_id long, shingle_set array<string>, n_sh long",
     )
-    ids = spark.createDataFrame([(10,)], "doc_id long")
+    ids = spark.createDataFrame([(10,), (11,), (12,)], "doc_id long")
     out = incremental_minhash_dedup_indexed(
         cb, cs, bb, bs, ids, threshold_pct=20, max_bucket=5
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    assert "__bsz" in plan
+    _assert_cap_below_collect(plan)
     assert not re.search(r"Filter \(?size\(__ms", plan)
-    # Semantics unchanged: hot bucket (7 > 5) dropped → batch doc kept.
-    assert {r["doc_id"] for r in out.collect()} == {10}
+    # hot bucket capped → docs 10/11 keep (no candidates); cold bucket
+    # under cap → doc 12 verified against doc 6 (J=1.0 ≥ 0.2) → drop.
+    assert {r["doc_id"] for r in out.collect()} == {10, 11}
+
+
+def _assert_cap_below_collect(plan: str) -> None:
+    """The window count node (``__bsz``) must be a descendant of the
+    collect_list aggregates in the plan tree — printed on a later line
+    and indented deeper — so the cap runs before any member array is
+    built. Fails loudly if either node is missing, so a Spark that
+    renders the plan differently cannot pass vacuously."""
+    lines = plan.splitlines()
+    win = [
+        i for i, ln in enumerate(lines) if "Window [" in ln and "__bsz" in ln
+    ]
+    agg = [i for i, ln in enumerate(lines) if "collect_list(" in ln]
+    assert win, "window cap (__bsz) missing from the executed plan"
+    assert agg, "collect_list aggregate missing from the executed plan"
+
+    def depth(i: int) -> int:
+        return lines[i].find("+- ")
+
+    assert min(win) > max(agg) and all(
+        depth(w) > depth(a) for w in win for a in agg
+    ), "window cap does not sit below the collect_list aggregate"
